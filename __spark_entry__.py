@@ -3691,10 +3691,8 @@ def oa_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array((F.col("o_custkey") % 20).cast("string")).alias("rft_issn"),
         F.array((F.col("o_custkey") % 11 + 20).cast("string")).alias("rft_eissn"),
     )
-    # r13 opt: the issn list is bounded config — pass it in-memory so
-    # apply_oa_flag compiles a row-local overlap literal instead of the
-    # explode/join/distinct/join-back (which re-executes the scan and
-    # shuffles the full stream by finc_id); guide §2.1 remove shuffles
+    # the issn list is bounded config — passed in-memory, apply_oa_flag
+    # compiles it to a row-local hash-set probe with no collect job
     out = apply_oa_flag(
         rec,
         oa_issns=["3", "7", "25"],

@@ -17,6 +17,8 @@ and reports records/second.
 
     python scale_bench.py                 # 10M records, local[$CPUS]
     SCALE_RECORDS=2000000 python scale_bench.py
+    # the oa_flag, licensing_tag and ai_chain legs only
+    SCALE_ONLY=licensing SCALE_RECORDS=3000000 python scale_bench.py
 
 Prints ONE JSON line:
     {"metric": "records_per_second", "oa_flag": N, "licensing_tag": N,
@@ -1796,9 +1798,115 @@ def _curation_leg(spark, docs, results: dict, timed) -> None:
     )
 
 
-def main() -> None:
+def _licensing_legs(spark, n_records: int, results: dict, timed) -> None:
+    """The span-tool-shaped legs: ``apply_oa_flag`` (50K-entry OA
+    list), ``attach_labels`` (22 ISILs, 2,000-entry ISSN lists, 30
+    KBART files) and the composed AIUpdate chain, each timed as the
+    best of three after a warm-up."""
     import datetime
 
+    from siskin_spark.operators.licensing import apply_oa_flag, attach_labels
+
+    records = spark.read.parquet(os.path.join(CORPUS, "records"))
+    holdings = spark.read.parquet(os.path.join(CORPUS, "holdings"))
+
+    oa_issns = spark.range(N_OA_ISSNS).select(_issn(F.col("id") * 3).alias("issn"))
+    free_colls = [f"Coll {k}" for k in range(0, N_COLLECTIONS, 20)]
+
+    oa = lambda: apply_oa_flag(  # noqa: E731
+        records,
+        oa_issns=oa_issns,
+        free_collections=free_colls,
+        oa_source_ids=["5", "17"],
+        excluded_source_ids=["39"],
+    )
+    timed(oa())  # warm-up: scan cache, codegen, broadcast
+    results["oa_flag_s"] = min(timed(oa()) for _ in range(3))
+
+    lic = lambda: attach_labels(  # noqa: E731
+        records,
+        filter_config(),
+        holdings=holdings,
+        now=datetime.date(2026, 8, 13),
+    )
+    timed(lic())
+    results["licensing_tag_s"] = min(timed(lic()) for _ in range(3))
+
+    # -- composed AIUpdate chain at full scale -------------------------
+    # The capstone DAG (oa_flag -> span-tag w/ drop -> groupcover ->
+    # label update -> solr export) as ONE plan over the 10M corpus: the
+    # per-operator legs above prove each stage; this proves the
+    # COMPOSITION holds its throughput when Catalyst fuses the stages
+    # (shared scans, one licensing broadcast, groupcover's narrow
+    # shuffle feeding the label join-back). DOIs are synthesized
+    # skewed: ~1% of records contend on 1K hot DOIs, 5% have none.
+    from siskin_spark.operators.dedup import groupcover as _gc
+    from siskin_spark.operators.export import solr_export
+    from siskin_spark.operators.joins import update_labels
+    from siskin_spark.schema import INTERMEDIATE_SCHEMA
+
+    h = F.xxhash64("finc_id")
+    doi = F.when(
+        h % 100 == 0,
+        F.concat(F.lit("10.9/hot"), (h % 1_000).cast("string")),
+    ).when(
+        h % 20 != 1,
+        F.concat(F.lit("10.9/x"), (h % (n_records // 2)).cast("string")),
+    )
+    base = records.withColumns(
+        {
+            "doi": doi,
+            "rft_atitle": F.concat(F.lit("Title "), F.col("finc_id")),
+            "rft_date": F.date_format("x_date", "yyyy-MM-dd"),
+            "languages": F.array(F.lit("eng")),
+            "finc_format": F.lit("ElectronicArticle"),
+            "url": F.array(F.concat(F.lit("https://example.org/"), F.col("finc_id"))),
+        }
+    )
+    have = set(base.columns)
+    conformed = base.select(
+        *[
+            F.col(f.name) if f.name in have
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in INTERMEDIATE_SCHEMA.fields
+        ]
+    )
+
+    def ai_chain():
+        flagged = apply_oa_flag(
+            conformed,
+            oa_issns=oa_issns,
+            free_collections=free_colls,
+            oa_source_ids=["5", "17"],
+            excluded_source_ids=["39"],
+        )
+        tagged = attach_labels(
+            flagged,
+            filter_config(),
+            holdings=holdings,
+            now=datetime.date(2026, 8, 13),
+            drop_unlabeled=True,
+        )
+        # same barrier as the sf0.1 capstone: tagged feeds BOTH
+        # groupcover and the label join-back; without it Catalyst
+        # executes the whole flag+licensing chain once per consumer
+        tagged = tagged.localCheckpoint(eager=False)
+        changes = _gc(
+            tagged.select("finc_id", "finc_source_id", "doi", "x_labels"),
+            labels_col="x_labels",
+            preferences=("3", "1", "5", "0", "2", "4"),
+            lower_key=True,
+        )
+        updated = update_labels(
+            tagged, changes, labels_col="x_labels", new_labels_col="x_labels"
+        )
+        return solr_export(updated)
+
+    timed(ai_chain())
+    results["ai_chain_s"] = min(timed(ai_chain()) for _ in range(3))
+
+
+def main() -> None:
     n_records = int(os.environ.get("SCALE_RECORDS", 10_000_000))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = get_spark("siskin-scale-bench", cpus=cpus)
@@ -1814,6 +1922,7 @@ def main() -> None:
         "neardup_incremental", "curation", "r9", "r10", "semincr", "r11",
         "sq8", "tokbudget", "nprobe", "dim768", "dailygate", "bm25", "dsir",
         "search", "searchprune", "searchgemm", "gatebench", "ndsearch",
+        "licensing",
     ):
         # iterate on this one leg without the ~25-minute full suite;
         # emits a partial JSON with only the leg's keys
@@ -1888,6 +1997,9 @@ def main() -> None:
         elif os.environ["SCALE_ONLY"] == "gatebench":
             _control_leg(spark, results, timed_only)
             _gate_leg(spark, results, timed_only)
+        elif os.environ["SCALE_ONLY"] == "licensing":
+            # no host control: compare by interleaving runs instead
+            _licensing_legs(spark, n_records, results, timed_only)
         elif os.environ["SCALE_ONLY"] == "r11":
             # round-11 additions: multi-chunk gemm admit, sub-centroid
             # recall curve, 100K-vocab unigram join form — controls first
@@ -1905,14 +2017,6 @@ def main() -> None:
         spark.stop()
         return
 
-    from siskin_spark.operators.licensing import apply_oa_flag, attach_labels
-
-    records = spark.read.parquet(os.path.join(CORPUS, "records"))
-    holdings = spark.read.parquet(os.path.join(CORPUS, "holdings"))
-
-    oa_issns = spark.range(N_OA_ISSNS).select(_issn(F.col("id") * 3).alias("issn"))
-    free_colls = [f"Coll {k}" for k in range(0, N_COLLECTIONS, 20)]
-
     def timed(df) -> float:
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
@@ -1920,25 +2024,7 @@ def main() -> None:
 
     results: dict[str, float] = {}
     _control_leg(spark, results, timed)
-
-    oa = lambda: apply_oa_flag(  # noqa: E731
-        records,
-        oa_issns=oa_issns,
-        free_collections=free_colls,
-        oa_source_ids=["5", "17"],
-        excluded_source_ids=["39"],
-    )
-    timed(oa())  # warm-up: scan cache, codegen, broadcast
-    results["oa_flag_s"] = min(timed(oa()) for _ in range(3))
-
-    lic = lambda: attach_labels(  # noqa: E731
-        records,
-        filter_config(),
-        holdings=holdings,
-        now=datetime.date(2026, 8, 13),
-    )
-    timed(lic())
-    results["licensing_tag_s"] = min(timed(lic()) for _ in range(3))
+    _licensing_legs(spark, n_records, results, timed)
 
     from siskin_spark.operators.dedup import snapshot_latest
 
@@ -2189,78 +2275,6 @@ def main() -> None:
     r80_scale, n80 = recall(0.80, 16, 12, recall_slice, t_slice)
     truth.unpersist()
 
-    # -- composed AIUpdate chain at full scale -------------------------
-    # The capstone DAG (oa_flag -> span-tag w/ drop -> groupcover ->
-    # label update -> solr export) as ONE plan over the 10M corpus: the
-    # per-operator legs above prove each stage; this proves the
-    # COMPOSITION holds its throughput when Catalyst fuses the stages
-    # (shared scans, one licensing broadcast, groupcover's narrow
-    # shuffle feeding the label join-back). DOIs are synthesized
-    # skewed: ~1% of records contend on 1K hot DOIs, 5% have none.
-    from siskin_spark.operators.dedup import groupcover as _gc
-    from siskin_spark.operators.export import solr_export
-    from siskin_spark.operators.joins import update_labels
-    from siskin_spark.schema import INTERMEDIATE_SCHEMA
-
-    h = F.xxhash64("finc_id")
-    doi = F.when(
-        h % 100 == 0,
-        F.concat(F.lit("10.9/hot"), (h % 1_000).cast("string")),
-    ).when(
-        h % 20 != 1,
-        F.concat(F.lit("10.9/x"), (h % (n_records // 2)).cast("string")),
-    )
-    base = records.withColumns(
-        {
-            "doi": doi,
-            "rft_atitle": F.concat(F.lit("Title "), F.col("finc_id")),
-            "rft_date": F.date_format("x_date", "yyyy-MM-dd"),
-            "languages": F.array(F.lit("eng")),
-            "finc_format": F.lit("ElectronicArticle"),
-            "url": F.array(F.concat(F.lit("https://example.org/"), F.col("finc_id"))),
-        }
-    )
-    have = set(base.columns)
-    conformed = base.select(
-        *[
-            F.col(f.name) if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in INTERMEDIATE_SCHEMA.fields
-        ]
-    )
-
-    def ai_chain():
-        flagged = apply_oa_flag(
-            conformed,
-            oa_issns=oa_issns,
-            free_collections=free_colls,
-            oa_source_ids=["5", "17"],
-            excluded_source_ids=["39"],
-        )
-        tagged = attach_labels(
-            flagged,
-            filter_config(),
-            holdings=holdings,
-            now=datetime.date(2026, 8, 13),
-            drop_unlabeled=True,
-        )
-        # same barrier as the sf0.1 capstone: tagged feeds BOTH
-        # groupcover and the label join-back; without it Catalyst
-        # executes the whole flag+licensing chain once per consumer
-        tagged = tagged.localCheckpoint(eager=False)
-        changes = _gc(
-            tagged.select("finc_id", "finc_source_id", "doi", "x_labels"),
-            labels_col="x_labels",
-            preferences=("3", "1", "5", "0", "2", "4"),
-            lower_key=True,
-        )
-        updated = update_labels(
-            tagged, changes, labels_col="x_labels", new_labels_col="x_labels"
-        )
-        return solr_export(updated)
-
-    timed(ai_chain())
-    results["ai_chain_s"] = min(timed(ai_chain()) for _ in range(3))
 
     # -- Structured Streaming throughput (availableNow) ----------------
     # Two shapes: the Python-state stateful dedup (the engine-extension

@@ -18,45 +18,32 @@ The reference fetches issn/content lists from URLs and freezes them
 or DataFrames before compilation — fetching is an ingestion concern and
 never happens inside executors.
 
-Execution model: column-only predicates fold into ONE pass over the
-records (broadcast literals — the reference's own observation that
-in-memory collection lists are the main speedup, amsl.py:906-922).
-Holdings leaves need a join; each distinct (files-tuple) gets one
-exploded-ISSN equi-join against the broadcast KBART table, aggregated
-back to a boolean flag column, and the tree then references the flag.
-All ISILs are evaluated in a single job — no per-ISIL passes over the
-corpus (span-tag iterates filters per record in one pass too).
+Execution model: every list leaf, of any size, is a row-local
+membership test against a hash set built once per task (Catalyst's
+InSet) — the reference's own observation that in-memory lists checked
+per record in one pass are the main speedup (amsl.py:906-922). Every
+leaf is two-valued: a NULL column or array element matches nothing, so
+``not`` never sees a NULL. Holdings leaves are the only join: one scan
+of the KBART table tags each row with a bitmask of the leaves its file
+serves, one explode of the records' ISSNs meets it in a broadcast join,
+``bit_or`` folds the hits per record and one join brings the mask
+back, where the compiled tree reads its bits. All ISILs are evaluated
+in that single plan — no per-ISIL passes over the corpus (span-tag
+iterates filters per record in one pass too).
 """
 
 from __future__ import annotations
 
-from typing import Any, Sequence
+from functools import reduce
+from typing import Any, Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.classic.column import Column as JVMColumn
 from pyspark.sql.functions import broadcast
+from pyspark.sql.utils import get_active_spark_context
 
 from siskin_spark.schema import issns_all
-from siskin_spark.session import local_table
-
-HOLDINGS_FLAG_PREFIX = "_hold_"
-CONTENT_FLAG_PREFIX = "_cont_"
-ISSN_FLAG_PREFIX = "_issnf_"
-
-# Above this many entries a content whitelist compiles to a broadcast
-# semi-join flag instead of a literal isin() — reference content files
-# run 10-50K ids (amsl.py:1174-1203) and a 50K-element isin builds a
-# huge expression tree.
-CONTENT_ISIN_MAX = 1000
-
-# Above this many entries an ISSN list compiles to a broadcast-join
-# flag riding the same exploded-ISSN frame and bit_or aggregate as the
-# holdings leaves. `arrays_overlap(record_issns, lit_array)` rebuilds
-# a hash set of the literal side PER RECORD — measured 38 s of a 49 s
-# attach_labels at 30M records for seven 2,000-entry lists; as join
-# flags the whole tree evaluation drops to ~12 s. Small lists stay
-# inline literals (cheap, and what the sf-scale oracle configs use).
-ISSN_JOIN_MAX = 100
 
 _EMBARGO_RE = r"^\s*([RP])([0-9]+)([DMY])\s*$"
 
@@ -119,11 +106,43 @@ def kbart_volume_issue_ok(
     )
 
 
-def _overlap(col: Column, values: list[str]) -> Column:
-    return F.arrays_overlap(
-        F.coalesce(col, F.array().cast("array<string>")),
-        F.array(*[F.lit(v) for v in values]),
-    )
+_SEP = "\x00"
+
+
+def _member(col: Column, values: Iterable[Any]) -> Column:
+    """``col IN values`` over the values' string forms (NULL for a NULL
+    ``col``). The list crosses py4j as ONE joined string split
+    JVM-side, so building the leaf costs O(1) round trips at any list
+    size; past 10 values Catalyst's OptimizeIn plans the ``In`` as an
+    InSet, a hash set built once per task."""
+    vals = sorted({str(v) for v in values if v is not None})
+    if not vals:
+        return F.lit(False)
+    if any(_SEP in v for v in vals):
+        raise ValueError("licensing list values must not contain NUL")
+    pattern = get_active_spark_context()._jvm.java.util.regex.Pattern
+    # flag 16 = Pattern.LITERAL; values are sorted, so only a leading
+    # empty string can occur, and split keeps it
+    jvals = pattern.compile(_SEP, 16).splitAsStream(_SEP.join(vals)).toList()
+    return JVMColumn(col._jc.isInCollection(jvals))
+
+
+def _in(col: Column, values: Iterable[Any]) -> Column:
+    """Two-valued membership of a scalar column: NULL is false."""
+    return F.coalesce(_member(col.cast("string"), values), F.lit(False))
+
+
+def _any_in(arr: Column, values: Iterable[Any]) -> Column:
+    """Two-valued overlap of an array<string> column with ``values``: a
+    NULL array or NULL element matches nothing."""
+    vals = [v for v in values if v is not None]
+    if not vals:
+        return F.lit(False)
+    return F.coalesce(F.exists(arr, lambda x: _member(x, vals)), F.lit(False))
+
+
+def _files_key(arg: dict[str, Any]) -> tuple[str, ...]:
+    return tuple(sorted(arg.get("files", arg.get("urls", []))))
 
 
 class LicensingCompiler:
@@ -144,11 +163,11 @@ class LicensingCompiler:
         self.now = now
         self.volume_col = volume_col
         self.issue_col = issue_col
-        self._holdings_leaves: dict[tuple[str, ...], str] = {}
-        self._content_leaves: dict[tuple[str, ...], str] = {}
-        self._issn_leaves: dict[tuple[str, ...], str] = {}
+        # files-tuple -> leaf index (its bit in the per-record mask)
+        self._holdings_leaves: dict[tuple[str, ...], int] = {}
+        self._cols: dict[str, Column] = {}
 
-    # -- pass 1: find join-backed leaves so their one fused join can be
+    # -- pass 1: number the holdings leaves so their one join can be
     # planned ---------------------------------------------------------
     def _collect_holdings(self, tree: dict[str, Any]) -> None:
         for op, arg in tree.items():
@@ -158,81 +177,96 @@ class LicensingCompiler:
             elif op == "not":
                 self._collect_holdings(arg)
             elif op == "holdings":
-                key = tuple(sorted(arg.get("files", arg.get("urls", []))))
-                if key not in self._holdings_leaves:
-                    self._holdings_leaves[key] = (
-                        f"{HOLDINGS_FLAG_PREFIX}{len(self._holdings_leaves)}"
-                    )
-            elif op == "content" and len(arg["list"]) > CONTENT_ISIN_MAX:
-                key = tuple(sorted(arg["list"]))
-                if key not in self._content_leaves:
-                    self._content_leaves[key] = (
-                        f"{CONTENT_FLAG_PREFIX}{len(self._content_leaves)}"
-                    )
-            elif op == "issn" and len(arg["list"]) > ISSN_JOIN_MAX:
-                key = tuple(sorted(arg["list"]))
-                if key not in self._issn_leaves:
-                    self._issn_leaves[key] = (
-                        f"{ISSN_FLAG_PREFIX}{len(self._issn_leaves)}"
-                    )
+                self._holdings_leaves.setdefault(
+                    _files_key(arg), len(self._holdings_leaves)
+                )
+
+    # -- flag representation ------------------------------------------
+    # With <= 63 holdings leaves (the reference runs ~30 holdings files)
+    # each leaf gets one BIT in a single long: the per-record aggregate
+    # is bit_or of longs instead of collect_set of arrays — a fixed
+    # 8-byte shuffle/join payload and zero array allocations, which is
+    # exactly the memory pressure the 30 M-row single-JVM leg hit. Past
+    # 63 leaves each KBART row carries the array of its leaf indices
+    # and a record the union of its rows' arrays.
+    def _bitmask(self) -> bool:
+        return len(self._holdings_leaves) <= 63
 
     # -- pass 2: tree -> Column --------------------------------------
+    def _col(self, name: str) -> Column:
+        """One Column object per referenced column, shared by every leaf
+        (each PySpark Column call costs about a dozen py4j round trips);
+        ``_issns`` is the union of print and e-ISSNs."""
+        if name not in self._cols:
+            self._cols[name] = issns_all() if name == "_issns" else F.col(name)
+        return self._cols[name]
+
     def _compile(self, tree: dict[str, Any]) -> Column:
         if len(tree) != 1:
             # implicit AND over sibling keys (reference treats each
             # filter dict entry as a conjunct, amsl.py:850-868)
             return self._compile({"and": [{k: v} for k, v in tree.items()]})
         ((op, arg),) = tree.items()
-        if op == "or":
-            out = F.lit(False)
-            for sub in arg:
-                out = out | self._compile(sub)
-            return out
-        if op == "and":
-            out = F.lit(True)
-            for sub in arg:
-                out = out & self._compile(sub)
-            return out
+        if op in ("or", "and"):
+            subs = [self._compile(sub) for sub in arg]
+            if not subs:
+                return F.lit(op == "and")
+            return reduce(Column.__or__ if op == "or" else Column.__and__, subs)
         if op == "not":
             return ~self._compile(arg)
         if op == "source":
-            return F.col("finc_source_id").isin([str(s) for s in arg])
+            return _in(self._col("finc_source_id"), arg)
         if op == "collection":
-            return _overlap(F.col("finc_mega_collection"), list(arg))
+            return _any_in(self._col("finc_mega_collection"), arg)
         if op == "subject":
-            return _overlap(F.col("subjects"), list(arg))
+            return _any_in(self._col("subjects"), arg)
         if op == "issn":
-            lst = arg["list"]
-            if len(lst) > ISSN_JOIN_MAX:
-                # large list: broadcast-join flag (see ISSN_JOIN_MAX) —
-                # arrays_overlap would rebuild the literal hash set per
-                # record
-                return F.col(self._issn_leaves[tuple(sorted(lst))])
-            return F.arrays_overlap(
-                issns_all(), F.array(*[F.lit(v) for v in lst])
-            )
+            return _any_in(self._col("_issns"), arg["list"])
         if op == "isbn":
-            return _overlap(F.col("rft_isbn"), list(arg["list"]))
+            return _any_in(self._col("rft_isbn"), arg["list"])
         if op == "content":
-            ids = arg["list"]
-            if len(ids) > CONTENT_ISIN_MAX:
-                return F.col(self._content_leaves[tuple(sorted(ids))])
-            return F.col(self.record_id_col).isin(list(ids))
+            return _in(self._col(self.record_id_col), arg["list"])
         if op == "holdings":
-            key = tuple(sorted(arg.get("files", arg.get("urls", []))))
-            return F.col(self._holdings_leaves[key])
+            i = self._holdings_leaves[_files_key(arg)]
+            hit = (
+                self._col("_flags").bitwiseAND(F.lit(1 << i)) != 0
+                if self._bitmask()
+                else F.array_contains(self._col("_flags"), i)
+            )
+            return F.coalesce(hit, F.lit(False))
         raise ValueError(f"unknown filter node: {op}")
 
     def _tagged_holdings(self) -> DataFrame:
-        """Every holdings leaf's KBART rows, tagged with the leaf's flag
-        name, in ONE small frame (the broadcast side). N leaves means N
-        filters of the dimension table — never N passes over records."""
+        """Every KBART row that serves some holdings leaf, with the
+        leaves it serves in ``_flag``, from ONE scan of the table (the
+        broadcast side) — N leaves never mean N scans."""
         h = self.holdings
         cols = set(h.columns)
         opt = lambda name: (  # noqa: E731
             F.col(name) if name in cols else F.lit(None).cast("string")
         )
-        base = h.select(
+
+        def serves(files: tuple[str, ...]) -> Column:
+            # a NULL file_uri serves no listed file: when() treats NULL
+            # as false
+            return _member(F.col("file_uri"), files) if files else F.lit(True)
+
+        leaves = self._holdings_leaves.items()
+        if self._bitmask():
+            flag = reduce(
+                Column.bitwiseOR,
+                [
+                    F.when(serves(files), F.lit(1 << i)).otherwise(F.lit(0))
+                    for files, i in leaves
+                ],
+            )
+            served = F.col("_flag") != 0
+        else:
+            flag = F.array_compact(
+                F.array(*[F.when(serves(files), F.lit(i)) for files, i in leaves])
+            )
+            served = F.size("_flag") > 0
+        return h.select(
             F.explode(
                 F.array_distinct(
                     F.array_compact(
@@ -252,194 +286,96 @@ class LicensingCompiler:
             opt("num_first_issue_online").try_cast("int").alias("_fiss"),
             opt("num_last_vol_online").try_cast("int").alias("_lvol"),
             opt("num_last_issue_online").try_cast("int").alias("_liss"),
-            *([F.col("file_uri")] if "file_uri" in cols else []),
-        )
-        tagged = None
-        for files, flag in self._holdings_leaves.items():
-            t = base
-            if files:
-                t = t.filter(F.col("file_uri").isin(list(files)))
-            t = t.withColumn("_flag", self._flag_lit(flag))
-            tagged = t if tagged is None else tagged.unionByName(t)
-        return tagged.drop("file_uri") if "file_uri" in cols else tagged
-
-    # -- flag representation ------------------------------------------
-    # With <= 63 join-backed leaves (the reference runs ~30 holdings
-    # files) each leaf gets one BIT in a single long: the per-record
-    # aggregate is bit_or of longs instead of collect_set of strings —
-    # a fixed 8-byte shuffle/join payload and zero array allocations,
-    # which is exactly the memory pressure the 30 M-row single-JVM leg
-    # hit. Past 63 leaves the representation degrades gracefully to
-    # the name-array path.
-    def _all_flag_names(self) -> list[str]:
-        return [
-            *self._holdings_leaves.values(),
-            *self._content_leaves.values(),
-            *self._issn_leaves.values(),
-        ]
-
-    def _flag_bits(self) -> dict[str, int] | None:
-        names = self._all_flag_names()
-        if len(names) > 63:
-            return None
-        return {name: 1 << i for i, name in enumerate(names)}
-
-    def _flag_lit(self, flag: str) -> Column:
-        bits = self._flag_bits()
-        if bits is None:
-            return F.lit(flag)
-        return F.lit(bits[flag]).cast("long")
+            flag.alias("_flag"),
+        ).filter(served)
 
     def _attach_flags(self, records: DataFrame, id_col: str) -> DataFrame:
-        """Attach every holdings flag AND every large-content flag with
-        ONE join against the records (union of per-leaf matches on the
-        small side -> collect_set of flag names -> array_contains).
-        The reference runs ~30 holdings files; sequentially that was
-        ~30 full left joins of the corpus — this is one. Large ISSN
-        lists ride the same machinery: their matches come from the
-        exploded-ISSN frame joined to the broadcast list."""
-        if not (
-            self._holdings_leaves or self._content_leaves or self._issn_leaves
-        ):
-            return records
-        spark = records.sparkSession
+        """Attach ``_flags``, every holdings leaf's hits for the record,
+        with ONE join against the records (matches on the small side ->
+        bit_or per record -> join back). The reference runs ~30
+        holdings files; sequentially that was ~30 full left joins of the
+        corpus — this is one."""
+        if self.holdings is None:
+            raise ValueError("config has holdings leaves but no holdings table given")
         rcols = set(records.columns)
-        matches = None  # (_rk, _flag) pairs, small/broadcastable side logic
-
-        if self._holdings_leaves:
-            if self.holdings is None:
+        if "embargo_info" in self.holdings.columns and self.now is None:
+            # Real KBART files always carry the embargo_info COLUMN
+            # (32-column standard) — only a parseable VALUE makes
+            # `now` mandatory. Holdings are config-sized, so this
+            # probe is one tiny scan of the broadcast side.
+            has_embargo = (
+                self.holdings.filter(
+                    F.regexp_extract(
+                        F.col("embargo_info").cast("string"), _EMBARGO_RE, 1
+                    )
+                    != ""
+                )
+                .limit(1)
+                .count()
+                > 0
+            )
+            if has_embargo:
                 raise ValueError(
-                    "config has holdings leaves but no holdings table given"
+                    "holdings table has embargo_info values but no `now` "
+                    "was given; embargo walls are wall-clock-relative and "
+                    "need an explicit evaluation date (attach_labels(..., "
+                    "now=date(...)))"
                 )
-            if "embargo_info" in self.holdings.columns and self.now is None:
-                # Real KBART files always carry the embargo_info COLUMN
-                # (32-column standard) — only a parseable VALUE makes
-                # `now` mandatory. Holdings are config-sized, so this
-                # probe is one tiny scan of the broadcast side.
-                has_embargo = (
-                    self.holdings.filter(
-                        F.regexp_extract(
-                            F.col("embargo_info").cast("string"), _EMBARGO_RE, 1
-                        )
-                        != ""
-                    )
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-                if has_embargo:
-                    raise ValueError(
-                        "holdings table has embargo_info values but no `now` "
-                        "was given; embargo walls are wall-clock-relative and "
-                        "need an explicit evaluation date (attach_labels(..., "
-                        "now=date(...)))"
-                    )
-            th = self._tagged_holdings()
-            # coverage is date-granular (KBART bounds are dates); record
-            # timestamps truncate to the day for the comparison
-            ids = records.select(
-                F.col(id_col).alias("_rk"),
-                # try_cast: malformed record date/volume/issue -> null
-                # -> the record simply matches no holdings window
-                # (reference skips such records), instead of aborting
-                # the whole tagging job under ANSI mode
-                F.col(self.date_col).try_cast("date").alias("_rdate"),
-                (
-                    F.col(self.volume_col).try_cast("int")
-                    if self.volume_col in rcols
-                    else F.lit(None).cast("int")
-                ).alias("_rvol"),
-                (
-                    F.col(self.issue_col).try_cast("int")
-                    if self.issue_col in rcols
-                    else F.lit(None).cast("int")
-                ).alias("_riss"),
-                F.explode(issns_all()).alias("_ident"),
+        # coverage is date-granular (KBART bounds are dates); record
+        # timestamps truncate to the day for the comparison
+        ids = records.select(
+            F.col(id_col).alias("_rk"),
+            # try_cast: malformed record date/volume/issue -> null
+            # -> the record simply matches no holdings window
+            # (reference skips such records), instead of aborting
+            # the whole tagging job under ANSI mode
+            F.col(self.date_col).try_cast("date").alias("_rdate"),
+            (
+                F.col(self.volume_col).try_cast("int")
+                if self.volume_col in rcols
+                else F.lit(None).cast("int")
+            ).alias("_rvol"),
+            (
+                F.col(self.issue_col).try_cast("int")
+                if self.issue_col in rcols
+                else F.lit(None).cast("int")
+            ).alias("_riss"),
+            F.explode(issns_all()).alias("_ident"),
+        )
+        cond = (
+            (F.col("_from").isNull() | (F.col("_rdate") >= F.col("_from")))
+            & (F.col("_to").isNull() | (F.col("_rdate") <= F.col("_to")))
+            & kbart_volume_issue_ok(
+                F.col("_rvol"),
+                F.col("_riss"),
+                F.col("_fvol"),
+                F.col("_fiss"),
+                F.col("_lvol"),
+                F.col("_liss"),
             )
-            cond = (
-                (F.col("_from").isNull() | (F.col("_rdate") >= F.col("_from")))
-                & (F.col("_to").isNull() | (F.col("_rdate") <= F.col("_to")))
-                & kbart_volume_issue_ok(
-                    F.col("_rvol"),
-                    F.col("_riss"),
-                    F.col("_fvol"),
-                    F.col("_fiss"),
-                    F.col("_lvol"),
-                    F.col("_liss"),
-                )
+        )
+        if self.now is not None:
+            cond = cond & kbart_embargo_ok(
+                F.col("_embargo"), F.col("_rdate"), F.lit(self.now)
             )
-            if self.now is not None:
-                cond = cond & kbart_embargo_ok(
-                    F.col("_embargo"), F.col("_rdate"), F.lit(self.now)
-                )
-            matches = (
-                ids.join(broadcast(th), on="_ident")
-                .filter(cond)
-                .select("_rk", "_flag")
-            )
-
-        if self._issn_leaves:
-            if self._holdings_leaves:
-                # reuse the frame the holdings join already built —
-                # one explode of the corpus serves both leaf kinds
-                issn_ids = ids.select("_rk", "_ident")
-            else:
-                issn_ids = records.select(
-                    F.col(id_col).alias("_rk"),
-                    F.explode(issns_all()).alias("_ident"),
-                )
-            spark_ = records.sparkSession
-            for issn_list, flag in self._issn_leaves.items():
-                lst = local_table(
-                    spark_, [(v,) for v in issn_list], "_ident string"
-                )
-                m = (
-                    issn_ids.join(broadcast(lst), on="_ident")
-                    .select("_rk", self._flag_lit(flag).alias("_flag"))
-                )
-                matches = m if matches is None else matches.unionByName(m)
-
-        id_type = records.schema[id_col].dataType.simpleString()
-        for content_ids, flag in self._content_leaves.items():
-            c = local_table(
-                spark, [(str(i),) for i in content_ids], "_id string"
-            ).select(
-                F.col("_id").cast(id_type).alias("_rk"),
-                self._flag_lit(flag).alias("_flag"),
-            )
-            # records ∩ whitelist resolved in the same single aggregate:
-            # semi-join happens implicitly when flags join back below
-            matches = c if matches is None else matches.unionByName(c)
-
-        bits = self._flag_bits()
-        if bits is not None:
-            # one long bitmask per record (see _flag_bits); bit_or
-            # partial-aggregates map-side like any sum
-            flags_per_rec = matches.groupBy("_rk").agg(
-                F.bit_or("_flag").alias("_flags")
-            )
-        else:
-            flags_per_rec = matches.groupBy("_rk").agg(
-                F.collect_set("_flag").alias("_flags")
-            )
+        matches = ids.join(broadcast(self._tagged_holdings()), on="_ident").filter(cond)
+        # bit_or partial-aggregates map-side like any sum
+        agg = (
+            F.bit_or("_flag")
+            if self._bitmask()
+            else F.flatten(F.collect_set("_flag"))
+        )
+        flags_per_rec = matches.groupBy("_rk").agg(agg.alias("_flags"))
         # shuffle_hash on the NARROW flags side: a sort-merge join here
         # would sort the full wide corpus by id — at 30 M rows in one
         # JVM that sort was the measured heap-pressure cliff. A
         # shuffled hash join builds the table on the (id, long) side
         # and streams the wide records through it unsorted.
-        records = records.join(
+        return records.join(
             flags_per_rec.withColumnRenamed("_rk", id_col).hint("shuffle_hash"),
             on=id_col,
             how="left",
         )
-        for flag in self._all_flag_names():
-            test = (
-                F.col("_flags").bitwiseAND(bits[flag]) != 0
-                if bits is not None
-                else F.array_contains(F.col("_flags"), flag)
-            )
-            records = records.withColumn(flag, F.coalesce(test, F.lit(False)))
-        return records.drop("_flags")
 
     def attach_labels(
         self,
@@ -453,26 +389,18 @@ class LicensingCompiler:
         to the sorted list of matching ISILs; optionally drop records
         with no label (span-tag -D, workflows/ai.py:232-237)."""
         self._holdings_leaves = {}
-        self._content_leaves = {}
-        self._issn_leaves = {}
         for tree in config.values():
             self._collect_holdings(tree)
-        work = self._attach_flags(records, id_col)
+        self._cols = {}
+        work = self._attach_flags(records, id_col) if self._holdings_leaves else records
         pairs = [
             F.when(self._compile(tree), F.lit(isil)) for isil, tree in config.items()
         ]
         out = work.withColumn(
             labels_col, F.array_sort(F.array_compact(F.array(*pairs)))
         )
-        out = out.drop(
-            *[
-                c
-                for c in out.columns
-                if c.startswith(
-                    (HOLDINGS_FLAG_PREFIX, CONTENT_FLAG_PREFIX, ISSN_FLAG_PREFIX)
-                )
-            ]
-        )
+        if self._holdings_leaves:
+            out = out.drop("_flags")
         if drop_unlabeled:
             out = out.filter(F.size(labels_col) > 0)
         return out
@@ -503,56 +431,20 @@ def apply_oa_flag(
     x_oa = (ISSN in OA-KBART list) OR (collection in free-content list)
     OR (source in -oasid allowlist), unless source in -xsid excludes.
 
-    ``oa_issns`` may be a DataFrame (KBART-scale lists: exploded
-    broadcast join on the ISSN, distinct hit set joined back by id) or
-    an in-memory sequence (the reference tool loads its ISSN file into
-    a process-local set — the same bounded-config shape). A sequence of
-    <= ISSN_JOIN_MAX entries compiles to a row-local ``arrays_overlap``
-    literal, which keeps the whole operator a pure map: the input plan
-    is evaluated ONCE and never re-keyed by id, where the join form
-    re-executes the entire upstream plan for the hit set and shuffles
-    the full record stream through a join-back (Spark does not reuse
-    unexchanged subtrees). Larger sequences fall back to the join —
-    ``arrays_overlap`` rebuilds the literal hash set per record (see
-    ISSN_JOIN_MAX), so big lists belong on the build side of a hash
-    join. Everything else is literal predicates.
+    ``oa_issns`` may be a DataFrame with an ``issn`` column, which is
+    collected once on the driver, or an in-memory sequence — the
+    reference tool loads its ISSN file into a process-local set the same
+    way. Either way the operator is a pure map: each test is a row-local
+    hash-set probe (see ``_in``), the input plan is evaluated once and
+    never re-keyed by id, and ``x_oa`` is never NULL.
     """
-    inline_issn: Column | None = None
-    if oa_issns is not None and not isinstance(oa_issns, DataFrame):
-        lst = sorted({str(s) for s in oa_issns if s is not None})
-        if not lst:
-            inline_issn = F.lit(False)
-        elif len(lst) <= ISSN_JOIN_MAX:
-            inline_issn = F.coalesce(
-                F.arrays_overlap(issns_all(), F.array(*[F.lit(v) for v in lst])),
-                F.lit(False),
-            )
-        else:
-            oa_issns = local_table(
-                records.sparkSession, [(s,) for s in lst], "issn string"
-            )
-    if inline_issn is not None:
-        records = records.withColumn("_oa_issn", inline_issn)
-    elif oa_issns is not None:
-        hit = (
-            records.select(F.col("finc_id").alias("_rk"), F.explode(issns_all()).alias("_i"))
-            .join(broadcast(oa_issns.select(F.col("issn").alias("_i")).distinct()), on="_i")
-            .select("_rk")
-            .distinct()
-            .withColumn("_oa_issn", F.lit(True))
-            .withColumnRenamed("_rk", "finc_id")
-        )
-        records = records.join(hit, on="finc_id", how="left").withColumn(
-            "_oa_issn", F.coalesce(F.col("_oa_issn"), F.lit(False))
-        )
-    else:
-        records = records.withColumn("_oa_issn", F.lit(False))
-
-    flag = F.col("_oa_issn")
+    if isinstance(oa_issns, DataFrame):
+        oa_issns = [r[0] for r in oa_issns.select("issn").collect()]
+    flag = _any_in(issns_all(), oa_issns or [])
     if free_collections:
-        flag = flag | _overlap(F.col("finc_mega_collection"), free_collections)
+        flag = flag | _any_in(F.col("finc_mega_collection"), free_collections)
     if oa_source_ids:
-        flag = flag | F.col("finc_source_id").isin(oa_source_ids)
+        flag = flag | _in(F.col("finc_source_id"), oa_source_ids)
     if excluded_source_ids:
-        flag = flag & ~F.col("finc_source_id").isin(excluded_source_ids)
-    return records.withColumn(flag_col, flag).drop("_oa_issn")
+        flag = flag & ~_in(F.col("finc_source_id"), excluded_source_ids)
+    return records.withColumn(flag_col, flag)

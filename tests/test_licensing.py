@@ -64,10 +64,9 @@ def test_oa_flag(spark):
 
 
 def test_oa_flag_list_input_matches_dataframe_input(spark):
-    # r13: a bounded in-memory issn list compiles to a row-local
-    # overlap literal (no explode/join/join-back) — same verdicts as
-    # the DataFrame join path on every record, including null-element
-    # issn arrays and records with no issns at all
+    # a DataFrame input is collected to the same in-memory set a
+    # sequence compiles to — same verdicts on every record, including
+    # null-element issn arrays and records with no issns at all
     recs = is_records(spark)
     df_out = {
         r["finc_id"]: r["x_oa"]
@@ -90,19 +89,20 @@ def test_oa_flag_list_input_matches_dataframe_input(spark):
         ).collect()
     }
     assert list_out == df_out
-    # above ISSN_JOIN_MAX the sequence falls back to the join path
-    from siskin_spark.operators.licensing import ISSN_JOIN_MAX
-
-    big = ["5555-6666"] + [f"{i:04d}-0000" for i in range(ISSN_JOIN_MAX + 1)]
-    big_out = {
-        r["finc_id"]: r["x_oa"]
-        for r in apply_oa_flag(recs, oa_issns=big).collect()
-    }
+    # padding with misses past 100 and past 1,000 entries changes no
+    # verdict
     small_out = {
         r["finc_id"]: r["x_oa"]
         for r in apply_oa_flag(recs, oa_issns=["5555-6666"]).collect()
     }
-    assert big_out == small_out  # the padding issns match no record
+    for n in (101, 1001):
+        big = ["5555-6666"] + [f"{i:04d}-0000" for i in range(n)]
+        big_out = {
+            r["finc_id"]: r["x_oa"]
+            for r in apply_oa_flag(recs, oa_issns=big).collect()
+        }
+        assert big_out == small_out
+    assert small_out["ai-28-b1"] is True
 
 
 def test_doi_groupcover_chain(spark):
@@ -232,17 +232,10 @@ def test_embargo_column_all_null_needs_no_now(spark):
     assert got["ai-55-c1"] == ["DE-15", "FID-BBI-DE-23"]
 
 
-def test_large_content_list_uses_broadcast_flag(spark):
-    from siskin_spark.operators.licensing import LicensingCompiler
-
+def test_large_content_list_labels(spark):
     ids = [f"pad-{i}" for i in range(1500)] + ["a1"]
     config = {"DE-CT": {"content": {"list": ids}}}
-    comp = LicensingCompiler()
-    out = comp.attach_labels(
-        is_records(spark), config, id_col="finc_record_id"
-    )
-    # >1000 entries compiled to the join-backed flag, not a literal isin
-    assert len(comp._content_leaves) == 1
+    out = attach_labels(is_records(spark), config, id_col="finc_record_id")
     got = {r["finc_record_id"]: list(r["x_labels"]) for r in out.collect()}
     assert got["a1"] == ["DE-CT"]
     assert got["a2"] == []
@@ -323,28 +316,179 @@ def test_snapshot_latest_doi(spark):
     assert got == ["ai-28-b1", "ai-49-a2", "ai-55-c2"]
 
 
-def test_attach_labels_large_issn_list_join_flag(spark):
-    """An ISSN list above ISSN_JOIN_MAX compiles to a broadcast-join
-    flag instead of a per-record arrays_overlap hash set; the label
-    outcome must be identical to the inline-literal path on the same
-    list (padding with misses changes the plan, never the matches).
-    Covers records matching on rft_issn, on rft_eissn, and on
-    neither."""
-    from siskin_spark.operators.licensing import ISSN_JOIN_MAX
-
+def test_attach_labels_large_issn_list_matches_small(spark):
+    """Padding an ISSN list with misses past 100 and past 1,000 entries
+    changes no label. Covers records matching on rft_issn, on
+    rft_eissn, and on neither."""
     recs = is_records(spark)
     hits = ["3333-4444", "7777-8888"]  # a1's eissn, c1/c2's issn
-    padding = [f"{i:04d}-999X" for i in range(ISSN_JOIN_MAX + 10)]
     small_cfg = {"DE-X": {"issn": {"list": hits}}}
-    big_cfg = {"DE-X": {"issn": {"list": hits + padding}}}
     want = {
         r["finc_id"]: list(r["x_labels"])
         for r in attach_labels(recs, small_cfg).collect()
     }
-    got = {
-        r["finc_id"]: list(r["x_labels"])
-        for r in attach_labels(recs, big_cfg).collect()
+    for n in (110, 1010):
+        padding = [f"{i:04d}-999X" for i in range(n)]
+        big_cfg = {"DE-X": {"issn": {"list": hits + padding}}}
+        got = {
+            r["finc_id"]: list(r["x_labels"])
+            for r in attach_labels(recs, big_cfg).collect()
+        }
+        assert got == want
+    assert any(v == ["DE-X"] for v in want.values())  # some record matched
+    assert any(v == [] for v in want.values())  # and some did not
+
+
+def _padded(values, n):
+    return list(values) + [f"pad-{i}" for i in range(n)]
+
+
+def test_null_leaf_is_false_at_every_list_size(spark):
+    """A leaf over a NULL (array element or scalar) is false, so its
+    negation is true — at every list size. Each record below carries a
+    NULL where the leaf looks and nothing that matches."""
+    recs = is_records(spark).withColumns(
+        {
+            "rft_issn": F.array(F.lit(None).cast("string")),
+            "rft_eissn": F.lit(None).cast("array<string>"),
+            "finc_mega_collection": F.array(F.lit(None).cast("string")),
+            "subjects": F.array(F.lit(None).cast("string")),
+            "rft_isbn": F.array(F.lit(None).cast("string")),
+            "finc_source_id": F.lit(None).cast("string"),
+            "finc_record_id": F.lit(None).cast("string"),
+        }
+    )
+    for n in (0, 150, 1500):
+        config = {
+            "DE-ISSN": {"not": {"issn": {"list": _padded(["1111-2222"], n)}}},
+            "DE-COLL": {"not": {"collection": _padded(["Crossref General"], n)}},
+            "DE-SUBJ": {"not": {"subject": _padded(["Music"], n)}},
+            "DE-ISBN": {"not": {"isbn": {"list": _padded(["978-0"], n)}}},
+            "DE-SRC": {"not": {"source": _padded(["55"], n)}},
+            "DE-CONT": {"not": {"content": {"list": _padded(["a1"], n)}}},
+        }
+        got = [list(r["x_labels"]) for r in attach_labels(recs, config).collect()]
+        assert got == [sorted(config)] * 5, (n, got)
+        oa = [
+            r["x_oa"]
+            for r in apply_oa_flag(
+                recs,
+                oa_issns=_padded(["1111-2222"], n),
+                free_collections=["Crossref General"],
+                excluded_source_ids=["55"],
+            ).collect()
+        ]
+        assert oa == [False] * 5, (n, oa)
+
+
+# -- plan shape: list leaves are row-local, holdings are one join ------
+
+
+def _write(df, path):
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def _plan_and_jobs(df):
+    """The executed plan's text (final AQE plan) and the number of
+    Spark jobs the noop write took."""
+    sc = df.sparkSession.sparkContext
+    group = f"lic-plan-{id(df)}"
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return df._jdf.queryExecution().executedPlan().toString(), jobs
+
+
+def test_list_leaves_plan_as_one_map_pass(spark, tmp_path):
+    recs = _write(is_records(spark), str(tmp_path / "recs"))
+    oa = spark.createDataFrame([("5555-6666",)], "issn string")
+    config = {
+        "DE-A": {"or": [{"source": ["49"]}, {"issn": {"list": _padded(["7777-8888"], 200)}}]},
+        "DE-B": {"and": [{"collection": _padded(["JSTOR Music Archive"], 20)},
+                         {"not": {"subject": ["Theory"]}}]},
+        "DE-C": {"content": {"list": _padded(["a1", "b1"], 1500)}},
     }
-    assert got == want
-    assert any(v == ["DE-X"] for v in got.values())  # some record matched
-    assert any(v == [] for v in got.values())  # and some did not
+    out = attach_labels(apply_oa_flag(recs, oa_issns=oa), config)
+    plan, jobs = _plan_and_jobs(out)
+    assert "Exchange" not in plan, plan  # neither shuffle nor broadcast
+    assert plan.count("FileScan parquet") == 1, plan
+    assert jobs == 1, jobs
+    narrow = out.select("x_labels", "x_oa")  # plan text prints both
+    optimized = narrow._jdf.queryExecution().optimizedPlan().toString()
+    assert "INSET" in optimized, optimized  # hash-set probes, not In chains
+    got = {r["finc_id"]: (list(r["x_labels"]), r["x_oa"]) for r in out.collect()}
+    assert got["ai-49-a1"] == (["DE-A", "DE-C"], False)
+    assert got["ai-28-b1"] == (["DE-C"], True)
+    assert got["ai-55-c1"] == (["DE-A", "DE-B"], False)
+
+
+def test_holdings_leaves_share_one_kbart_scan_and_broadcast(spark, tmp_path):
+    recs = _write(is_records(spark), str(tmp_path / "recs"))
+    kbart_path = str(tmp_path / "kbart")
+    holdings = _write(kbart_holdings(spark), kbart_path)
+    config = {
+        "DE-15": {"holdings": {"files": ["file:kbart_de15"]}},
+        "DE-14": {"holdings": {"files": ["file:kbart_de14"]}},
+        "DE-ALL": {"holdings": {"files": []}},
+        "DE-BOTH": {"and": [
+            {"holdings": {"files": ["file:kbart_de14", "file:kbart_de15"]}},
+            {"issn": {"list": _padded(["5555-6666"], 150)}},
+        ]},
+        "DE-NOT": {"not": {"issn": {"list": _padded(["7777-8888"], 1500)}}},
+    }
+    out = attach_labels(recs, config, holdings=holdings)
+    plan, jobs = _plan_and_jobs(out)
+    # the KBART broadcast, the two shuffle sides of the join-back, the
+    # result: none of it grows with the number of leaves
+    assert jobs <= 4, jobs
+    assert plan.count(kbart_path.rstrip("/").split("/")[-1] + "]") == 1, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    got = {r["finc_id"]: list(r["x_labels"]) for r in out.collect()}
+    assert got == {
+        "ai-49-a1": ["DE-15", "DE-ALL", "DE-NOT"],  # 1990- window
+        "ai-49-a2": ["DE-15", "DE-ALL", "DE-NOT"],
+        "ai-28-b1": ["DE-14", "DE-ALL", "DE-BOTH", "DE-NOT"],
+        "ai-55-c1": ["DE-15", "DE-ALL"],  # 1950-2000 window
+        "ai-55-c2": [],  # 2024 outside the window
+    }
+
+
+def test_many_holdings_leaves_label_correctly(spark):
+    """40 distinct holdings leaves use bits past 31 of the per-record
+    mask; past 63 the mask gives way to leaf-index arrays. Either way
+    every leaf answers as it does alone."""
+    recs = is_records(spark)
+    holdings = kbart_holdings(spark)
+    alone = {
+        real: {
+            r["finc_id"]
+            for r in attach_labels(
+                recs, {"X": {"holdings": {"files": [real]}}}, holdings=holdings
+            ).collect()
+            if r["x_labels"]
+        }
+        for real in ("file:kbart_de15", "file:kbart_de14")
+    }
+    assert alone == {
+        "file:kbart_de15": {"ai-49-a1", "ai-49-a2", "ai-55-c1"},
+        "file:kbart_de14": {"ai-28-b1"},
+    }
+    for pairs in (20, 35):
+        config = {
+            f"P{i:02d}": {"holdings": {"files": [real, f"file:pad{i}"]}}
+            for i, real in enumerate(["file:kbart_de15", "file:kbart_de14"] * pairs)
+        }
+        config["DE-NONE"] = {"holdings": {"files": ["file:nothing"]}}
+        got = {
+            r["finc_id"]: set(r["x_labels"])
+            for r in attach_labels(recs, config, holdings=holdings).collect()
+        }
+        for isil, tree in config.items():
+            want = alone.get(tree["holdings"]["files"][0], set())
+            assert {fid for fid, labels in got.items() if isil in labels} == want, (
+                len(config), isil,
+            )

@@ -421,16 +421,25 @@ _SRC = st.sampled_from(["1", "2", "3", "4"])
 _COLL = st.sampled_from(["c0", "c1", "c2", "c3"])
 _SUBJ = st.sampled_from(["s0", "s1", "s2"])
 _ISSN = st.sampled_from(["1111-111X", "2222-222X", "3333-333X", "4444-444X"])
+_RID = st.sampled_from(["r0", "r1", "r2"])
+# list leaves padded with values no record carries, past 100 and past
+# 1,000 entries — list size must never change a label
+_PAD = st.sampled_from([0, 0, 150, 1500])
+
+
+def _padded(values):
+    return st.tuples(st.lists(values, min_size=1, max_size=3), _PAD).map(
+        lambda t: t[0] + [f"pad-{i}" for i in range(t[1])]
+    )
 
 
 def _leaf():
     return st.one_of(
-        st.lists(_SRC, min_size=1, max_size=3).map(lambda v: {"source": v}),
-        st.lists(_COLL, min_size=1, max_size=3).map(lambda v: {"collection": v}),
-        st.lists(_SUBJ, min_size=1, max_size=2).map(lambda v: {"subject": v}),
-        st.lists(_ISSN, min_size=1, max_size=3).map(
-            lambda v: {"issn": {"list": v}}
-        ),
+        _padded(_SRC).map(lambda v: {"source": v}),
+        _padded(_COLL).map(lambda v: {"collection": v}),
+        _padded(_SUBJ).map(lambda v: {"subject": v}),
+        _padded(_ISSN).map(lambda v: {"issn": {"list": v}}),
+        _padded(_RID).map(lambda v: {"content": {"list": v}}),
     )
 
 
@@ -444,20 +453,31 @@ _tree = st.recursive(
     max_leaves=6,
 )
 
+
+def _nullable_list(values, max_size):
+    """NULL array, or an array that may hold NULL elements."""
+    return st.one_of(
+        st.none(), st.lists(st.one_of(st.none(), values), max_size=max_size)
+    )
+
+
 _rec = st.tuples(
-    _SRC,
-    st.one_of(st.none(), st.lists(_COLL, max_size=3)),
-    st.one_of(st.none(), st.lists(_SUBJ, max_size=2)),
-    st.one_of(st.none(), st.lists(_ISSN, max_size=2)),
-    st.one_of(st.none(), st.lists(_ISSN, max_size=1)),
+    st.one_of(st.none(), _SRC),
+    _nullable_list(_COLL, 3),
+    _nullable_list(_SUBJ, 2),
+    _nullable_list(_ISSN, 2),
+    _nullable_list(_ISSN, 1),
+    st.one_of(st.none(), _RID),
 )
 
 
 def _naive(tree, rec):
     """Reference evaluator: mirrors amsl.py tree semantics over one
-    record dict. All leaves are null-safe (compiler coalesces arrays
-    to empty before overlap), so plain Boolean logic suffices."""
-    src, coll, subj, issn, eissn = rec
+    record dict. Every leaf is two-valued — it matches or it does not,
+    as in span-tag: a NULL source, record id, array or array element
+    matches nothing — so plain Boolean logic suffices, ``not``
+    included."""
+    src, coll, subj, issn, eissn, rid = rec
     if len(tree) != 1:
         return all(_naive({k: v}, rec) for k, v in tree.items())
     ((op, arg),) = tree.items()
@@ -468,14 +488,26 @@ def _naive(tree, rec):
     if op == "not":
         return not _naive(arg, rec)
     if op == "source":
-        return src in [str(s) for s in arg]
+        return src is not None and src in [str(s) for s in arg]
     if op == "collection":
         return bool(set(coll or []) & set(arg))
     if op == "subject":
         return bool(set(subj or []) & set(arg))
     if op == "issn":
         return bool(set((issn or []) + (eissn or [])) & set(arg["list"]))
+    if op == "content":
+        return rid is not None and rid in arg["list"]
     raise ValueError(op)
+
+
+def _naive_oa(rec, oa_issns, free, allow, exclude):
+    src, coll, _, issn, eissn, _ = rec
+    hit = (
+        bool(set((issn or []) + (eissn or [])) & set(oa_issns))
+        or bool(set(coll or []) & set(free))
+        or (src is not None and src in allow)
+    )
+    return hit and not (src is not None and src in exclude)
 
 
 @settings(max_examples=10, deadline=None,
@@ -484,17 +516,23 @@ def _naive(tree, rec):
 @given(
     recs=st.lists(_rec, min_size=1, max_size=8),
     trees=st.lists(_tree, min_size=1, max_size=3),
+    oa_issns=_padded(_ISSN),
+    free=st.lists(_COLL, max_size=2),
+    allow=st.lists(_SRC, max_size=2),
+    exclude=st.lists(_SRC, max_size=2),
 )
-def test_attach_labels_matches_naive(spark, recs, trees):
-    from siskin_spark.operators.licensing import attach_labels
+def test_attach_labels_matches_naive(
+    spark, recs, trees, oa_issns, free, allow, exclude
+):
+    from siskin_spark.operators.licensing import apply_oa_flag, attach_labels
 
     config = {f"ISIL-{i}": t for i, t in enumerate(trees)}
     df = spark.createDataFrame(
         [
-            (f"id{i}", r[0], r[1], r[2], r[3], r[4])
+            (f"id{i}", r[5], r[0], r[1], r[2], r[3], r[4])
             for i, r in enumerate(recs)
         ],
-        "finc_id string, finc_source_id string, "
+        "finc_id string, finc_record_id string, finc_source_id string, "
         "finc_mega_collection array<string>, subjects array<string>, "
         "rft_issn array<string>, rft_eissn array<string>",
     )
@@ -507,6 +545,20 @@ def test_attach_labels_matches_naive(spark, recs, trees):
             isil for isil, t in config.items() if _naive(t, rec)
         )
         assert got[f"id{i}"] == want, (rec, config, got[f"id{i}"], want)
+
+    oa_df = spark.createDataFrame([(v,) for v in oa_issns], "issn string")
+    for oa_input in (oa_issns, oa_df):
+        flagged = apply_oa_flag(
+            df,
+            oa_issns=oa_input,
+            free_collections=free,
+            oa_source_ids=allow,
+            excluded_source_ids=exclude,
+        )
+        got_oa = {r["finc_id"]: r["x_oa"] for r in flagged.collect()}
+        for i, rec in enumerate(recs):
+            want_oa = _naive_oa(rec, oa_issns, free, allow, exclude)
+            assert got_oa[f"id{i}"] is want_oa, (rec, type(oa_input), got_oa)
 
 
 # --- KBART holdings leaf: interval + embargo + volume walls vs naive ---
