@@ -2277,9 +2277,8 @@ def main() -> None:
 
 
     # -- Structured Streaming throughput (availableNow) ----------------
-    # Two shapes: the Python-state stateful dedup (the engine-extension
-    # path — applyInPandasWithState, Arrow batches, state store) and
-    # the JVM-native watermarked windowed aggregation. min-of-2 with a
+    # Two shapes: the JVM-native keep-first dedup and the JVM-native
+    # watermarked windowed aggregation. min-of-2 with a
     # FRESH checkpoint each run (a reused checkpoint would no-op: the
     # state store remembers every emitted key — that exactly-once
     # bookkeeping is the feature, but it makes rerun timings vacuous);
@@ -2287,10 +2286,7 @@ def main() -> None:
     import tempfile
 
     from siskin_spark.streaming.incremental import windowed_counts
-    from siskin_spark.streaming.stateful import (
-        streaming_dedup_first,
-        streaming_dedup_native,
-    )
+    from siskin_spark.streaming.stateful import streaming_dedup_native
 
     n_stream = int(os.environ.get("SCALE_STREAM_ROWS", 2_000_000))
     stream_dir = os.path.join(CORPUS, f"stream_src2_{n_stream}")
@@ -2318,19 +2314,9 @@ def main() -> None:
         finally:
             shutil.rmtree(ckpt, ignore_errors=True)
 
-    def dedup_sink(src, ckpt):
-        return (
-            streaming_dedup_first(src, ["doi"])
-            .writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-
     def dedup_native_sink(src, ckpt):
-        # same keep-first dedup, JVM dropDuplicatesWithinWatermark:
-        # the production path (bounded state, zero Python in the loop)
+        # keep-first dedup, JVM dropDuplicatesWithinWatermark
+        # (bounded state, zero Python in the loop)
         return (
             streaming_dedup_native(
                 src, ["doi"], event_time_col="ts", watermark="1 hour"
@@ -2355,7 +2341,6 @@ def main() -> None:
             .start()
         )
 
-    results["stream_dedup_s"] = min(run_stream(dedup_sink) for _ in range(2))
     results["stream_dedup_native_s"] = min(
         run_stream(dedup_native_sink) for _ in range(2)
     )
@@ -2437,8 +2422,6 @@ def main() -> None:
         "ai_chain_s": round(results["ai_chain_s"], 2),
         "ai_chain_rps": round(n_records / results["ai_chain_s"]),
         "stream_rows": n_stream,
-        "stream_dedup_s": round(results["stream_dedup_s"], 2),
-        "stream_dedup_rps": round(n_stream / results["stream_dedup_s"]),
         "stream_dedup_native_s": round(results["stream_dedup_native_s"], 2),
         "stream_dedup_native_rps": round(
             n_stream / results["stream_dedup_native_s"]

@@ -140,18 +140,6 @@ def brute_force_topk(
     )
 
 
-def sign_bucket(vec: Column, dims: int = 6) -> Column:
-    """Crude-but-deterministic LSH bucket: sign bits of the first
-    ``dims`` components packed into an integer (2^dims buckets).
-    A stand-in for random-hyperplane LSH that any SQL engine can
-    recompute; swap hyperplanes in via :func:`hyperplane_bucket`."""
-    bit = lambda j: F.when(F.element_at(vec, j + 1) > 0, F.lit(1 << j)).otherwise(F.lit(0))  # noqa: E731
-    out = bit(0)
-    for j in range(1, dims):
-        out = out + bit(j)
-    return out
-
-
 def plane_weights(plane: int, dim: int = 64) -> list[float]:
     """Deterministic pseudo-random ±1 hyperplane, md5-seeded per plane.
 

@@ -9,15 +9,15 @@ plans instead of external sorts:
 - D2 ``argmax_dedup``         — keep the row with the max ordering value
   per group, then optionally semi-join survivors back
   (reference: sources/doaj.py:143-217, `sort -k3,3 -k2,2 | tac | sort -u`).
-- D4 ``drop_exact_duplicates`` — `sort -u` over rows
-  (reference: sources/ios.py:118-137).
+- D4 exact dedup              — `sort -u` over rows: ``snapshot_earliest``
+  keyed on the row content (reference: sources/ios.py:118-137).
 - D5 ``groupcover``           — preference-based label reassignment per
   DOI group (reference: workflows/ai.py:250-342, Go `groupcover`).
 - D6 ``distinct_sorted``      — distinct value lists
   (reference: sources/crossref.py:419-505).
 
 Scale notes: all of these shuffle exactly once on the dedup key.
-``snapshot_latest`` uses `max_by(struct(*), ord)` per key — a hash
+``snapshot_latest`` uses `max_by(struct(*), ord)` per key — an
 aggregate with map-side partial combine — instead of a window, because
 a window (rank + filter) materializes and sorts every version of every
 key while the aggregate keeps one winner per key per map task. At the
@@ -37,7 +37,6 @@ def snapshot_latest(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column],
-    unique_order: bool = False,
 ) -> DataFrame:
     """D1: keep the newest row per key (append-only feed -> snapshot).
 
@@ -47,38 +46,31 @@ def snapshot_latest(
     position, which has no Spark equivalent, so an explicit tiebreak is
     the correct re-expression.
 
-    Default shape: ``groupBy(keys).agg(max_by(struct(cols), ord))`` so
+    Shape: ``groupBy(keys).agg(max_by(struct(cols), struct(order_by)))``
+    — one Exchange by ``keys`` and no join, whatever the order arity;
     the partial (map-side) aggregation keeps one candidate per key per
-    partition before the shuffle. Because the struct-valued max_by
-    buffer is not hash-aggregable, this plans SortAggregates — a sort
-    of the full input by key on BOTH sides of the exchange, re-run by
-    every downstream consumer after the reused exchange.
+    partition before the shuffle. The struct-valued buffer is not
+    hash-aggregable, so both sides of the exchange plan SortAggregates.
 
-    ``unique_order=True`` (r14, guide §2.1/§3) opts into a sort-free
-    shape for inputs whose order tuple is NON-NULL and UNIQUE within
-    each key group (every registry caller passes a primary key as the
-    final tiebreak): one shared hash-Exchange by ``keys``, a plain
-    min/max HashAggregate per order column, and a co-partitioned
-    shuffled-hash join + equality filter that keeps exactly the winner
-    row. No sort anywhere, winners identical to the max_by form
-    (pinned by a parity test). NULL keys group together (null-safe
-    join); NULL order values are out of contract (the max_by form
-    skips them, the filter drops them — with an all-NULL group the
-    forms differ, which is why this is opt-in).
+    Contract (pinned by ``tests/test_properties.py``): NULL keys form
+    one group and yield one row. A NULL order value ranks lowest — the
+    struct ordering puts NULL fields first — so it loses here and wins
+    in :func:`snapshot_earliest`. Rows tied on the full order tuple
+    yield exactly one row holding that tuple; which tied row supplies
+    the other columns is unspecified.
     """
-    return _snapshot(df, keys, order_by, latest=True, unique_order=unique_order)
+    return _snapshot(df, keys, order_by, latest=True)
 
 
 def snapshot_earliest(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column],
-    unique_order: bool = False,
 ) -> DataFrame:
     """D1 dual: keep the smallest-ordered row per key (deterministic
     `sort -u`-style representative: e.g. min id per duplicate text).
-    See :func:`snapshot_latest` for ``unique_order``."""
-    return _snapshot(df, keys, order_by, latest=False, unique_order=unique_order)
+    Same shape and contract as :func:`snapshot_latest`."""
+    return _snapshot(df, keys, order_by, latest=False)
 
 
 def _snapshot(
@@ -86,63 +78,13 @@ def _snapshot(
     keys: Sequence[str],
     order_by: Sequence[str | Column],
     latest: bool,
-    unique_order: bool,
 ) -> DataFrame:
     cols = df.columns
-    ords = [c if isinstance(c, Column) else F.col(c) for c in order_by]
-    if not unique_order:
-        ord_expr = F.struct(*ords)
-        pick = F.max_by if latest else F.min_by
-        winner = pick(F.struct(*[F.col(c) for c in cols]), ord_expr).alias("_w")
-        out = df.groupBy(*[F.col(k) for k in keys]).agg(winner)
-        return out.select(*[F.col(f"_w.{c}").alias(c) for c in cols])
-    # hash shape: stage the order expressions, share ONE exchange by
-    # keys between the winner aggregate and the probe side (AQE stage
-    # reuse), and peel the lexicographic winner one order column per
-    # round — each round is a plain min/max HashAggregate (primitive
-    # buffer) plus a co-partitioned shuffled-hash join, so the full
-    # input is never sorted. Multi-column orders run one round per
-    # column; every registry caller has <= 2.
-    staged = df.withColumns(
-        {f"_snap_o{i}": c for i, c in enumerate(ords)}
-    )
-    cur = staged.repartition(*[F.col(k) for k in keys])
-    agg_fn = F.max if latest else F.min
-    for i in range(len(ords)):
-        oc = f"_snap_o{i}"
-        w = cur.groupBy(*[F.col(k) for k in keys]).agg(
-            agg_fn(F.col(oc)).alias("_snap_w")
-        )
-        w = w.select(
-            *[F.col(k).alias(f"_snap_k_{k}") for k in keys], "_snap_w"
-        )
-        cond = None
-        for k in keys:
-            c = F.col(k).eqNullSafe(F.col(f"_snap_k_{k}"))
-            cond = c if cond is None else cond & c
-        cur = (
-            cur.join(w.hint("shuffle_hash"), cond)
-            .filter(F.col(oc) == F.col("_snap_w"))
-            .drop("_snap_w", *[f"_snap_k_{k}" for k in keys])
-        )
-    return cur.select(*cols)
-
-
-def snapshot_latest_window(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[Column],
-) -> DataFrame:
-    """D1 via window row_number — reference plan shape, kept for parity
-    testing and for when the full sorted-runs-per-key order matters.
-    Prefer :func:`snapshot_latest` (cheaper shuffle) in pipelines.
-    """
-    w = Window.partitionBy(*keys).orderBy(*[c.desc() for c in order_by])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    ord_expr = F.struct(*[c if isinstance(c, Column) else F.col(c) for c in order_by])
+    pick = F.max_by if latest else F.min_by
+    winner = pick(F.struct(*[F.col(c) for c in cols]), ord_expr).alias("_w")
+    out = df.groupBy(*[F.col(k) for k in keys]).agg(winner)
+    return out.select(*[F.col(f"_w.{c}").alias(c) for c in cols])
 
 
 def argmax_dedup(
@@ -166,14 +108,6 @@ def semi_join_back(full: DataFrame, kept_ids: DataFrame, key: str) -> DataFrame:
     """D2 second half: restrict ``full`` to ids surviving dedup
     (reference: grep -Ff kept-ids, sources/doaj.py:190-217)."""
     return full.join(kept_ids.select(key).distinct(), on=key, how="left_semi")
-
-
-def drop_exact_duplicates(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """D4: `sort -u` equivalent. With ``subset``, keeps an arbitrary row
-    per duplicate group — for deterministic results use
-    :func:`argmax_dedup` with an explicit tiebreaker instead.
-    """
-    return df.dropDuplicates(list(subset)) if subset else df.distinct()
 
 
 def distinct_sorted(df: DataFrame, col: str) -> DataFrame:
@@ -332,7 +266,6 @@ def snapshot_merge(
     delta: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column],
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Incremental D1: fold a feed increment into an existing snapshot
     without re-deduplicating untouched keys.
@@ -350,13 +283,9 @@ def snapshot_merge(
     Result is row-identical to ``snapshot_latest(snapshot ∪ delta)``
     provided ``snapshot`` is already deduplicated on ``keys`` (the
     invariant a snapshot table maintains); the oracle query pins this.
-    ``broadcast_delta=False`` for deltas too large to broadcast — the
-    splits become shuffle joins but the re-dedup stays delta-sized.
     """
     on = [k for k in keys]
-    dk = delta.select(*on).distinct()
-    if broadcast_delta:
-        dk = F.broadcast(dk)
+    dk = F.broadcast(delta.select(*on).distinct())
     untouched = snapshot.join(dk, on=on, how="left_anti")
     touched = snapshot.join(dk, on=on, how="left_semi")
     rededup = snapshot_latest(

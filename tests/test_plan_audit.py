@@ -71,3 +71,16 @@ def test_scans_prune_columns(spark, sf_dir):
     scan = df._jdf.queryExecution().executedPlan().toString()
     assert "p_retailprice" not in scan, scan
     assert "o_totalprice" not in scan, scan
+
+
+def test_snapshot_plans_one_exchange_no_join(spark, sf_dir):
+    # a multi-column order still plans one aggregate over one Exchange
+    # by key, with no join
+    from siskin_spark.operators.dedup import snapshot_latest
+    from siskin_spark.sources.readers import read_table
+
+    orders = read_table(spark, sf_dir, "orders")
+    df = snapshot_latest(orders, ["o_custkey"], ["o_orderdate", "o_orderkey"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan

@@ -5,12 +5,12 @@ inputs (duplicate timestamps, empty sides, single-row groups)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from siskin_spark.operators.dedup import groupcover, snapshot_latest
+from siskin_spark.operators.dedup import groupcover, snapshot_earliest, snapshot_latest
 from siskin_spark.operators.joins import asof_join
 
 _slow = settings(
@@ -65,17 +65,44 @@ def test_asof_join_matches_naive(spark, left, right):
         assert got[lid] == want, (lid, k, t, cands)
 
 
+# (key, o1, o2, o3, payload): NULL keys and NULL order values, small
+# domains so full-order-tuple ties are common; payload is not ordered
+_snap_rows = st.lists(
+    st.tuples(
+        st.none() | st.integers(0, 2),
+        *[st.none() | st.integers(0, 2)] * 3,
+        st.integers(0, 99),
+    ),
+    min_size=0,
+    max_size=25,
+)
+
+
 @_slow
-@given(rows=_rows)
-def test_snapshot_latest_is_argmax(spark, rows):
-    if not rows:
-        return
-    df = spark.createDataFrame(rows, "k int, ts int, p int")
-    got = {(r.k, r.ts, r.p) for r in snapshot_latest(df, ["k"], ["ts", "p"]).collect()}
-    want = set()
-    for k in {r[0] for r in rows}:
-        want.add(max((r for r in rows if r[0] == k), key=lambda r: (r[1], r[2])))
-    assert got == want
+@given(rows=_snap_rows, n_ord=st.integers(1, 3), latest=st.booleans())
+@example(rows=[], n_ord=1, latest=True)
+@example(rows=[(1, None, 0, 0, 1), (1, 4, 0, 0, 2)], n_ord=1, latest=False)
+@example(rows=[(None, 1, 1, 0, 1), (None, 1, 1, 0, 2), (None, 0, 5, 0, 3)], n_ord=2, latest=True)
+def test_snapshot_latest_is_argmax(spark, rows, n_ord, latest):
+    """snapshot_latest / snapshot_earliest against a Python argmax /
+    argmin: one row per key (the NULL key is one group), NULL order
+    values rank lowest, a tie on the full order tuple yields exactly
+    one of the tied input rows."""
+    schema = "k int, o1 int, o2 int, o3 int, p int"
+    df = spark.createDataFrame(rows, schema)
+    ords = ["o1", "o2", "o3"][:n_ord]
+    snap = snapshot_latest if latest else snapshot_earliest
+    got = [tuple(r) for r in snap(df, ["k"], ords).collect()]
+
+    def rank(r):
+        return tuple((r[i] is not None, r[i] or 0) for i in range(1, n_ord + 1))
+
+    pick = max if latest else min
+    want = {k: rank(pick((r for r in rows if r[0] == k), key=rank)) for k in {r[0] for r in rows}}
+    assert len(got) == len(want) and {r[0] for r in got} == set(want)
+    for r in got:
+        assert r in rows
+        assert rank(r) == want[r[0]], (r, want[r[0]])
 
 
 @_slow

@@ -1,6 +1,5 @@
 """Tests: Solr bulk sink batching/commit protocol, stateful streaming
-dedup (applyInPandasWithState) including state persistence across
-availableNow restarts."""
+dedup including state persistence across availableNow restarts."""
 
 from __future__ import annotations
 
@@ -14,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from siskin_spark.operators.export import solr_bulk_sink
-from siskin_spark.streaming.stateful import streaming_dedup_first
+from siskin_spark.streaming.stateful import streaming_dedup_native
 
 
 def _file_transport(root: str):
@@ -63,51 +62,7 @@ def test_solr_bulk_sink_batches_and_commit(tmp_path, spark, sf_dir):
     }
 
 
-def _run_dedup_stream(spark, src, ckpt, dst):
-    schema = "k bigint, v string"
-    stream = spark.readStream.schema(schema).json(src)
-    deduped = streaming_dedup_first(stream, ["k"])
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", dst)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
-
-
-def test_streaming_dedup_first_across_restarts(tmp_path, spark):
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    dst = str(tmp_path / "out")
-    os.makedirs(src)
-
-    with open(os.path.join(src, "b1.json"), "w") as fh:
-        for k, v in [(1, "a"), (2, "b"), (1, "dup-in-batch")]:
-            fh.write(json.dumps({"k": k, "v": v}) + "\n")
-    _run_dedup_stream(spark, src, ckpt, dst)
-
-    first = spark.read.parquet(dst)
-    assert first.count() == 2  # in-batch duplicate of k=1 suppressed
-    assert {r.k for r in first.collect()} == {1, 2}
-
-    # second availableNow run: k=1/2 are in the state store -> only k=3 emits
-    with open(os.path.join(src, "b2.json"), "w") as fh:
-        for k, v in [(1, "late-dup"), (3, "c"), (2, "late-dup")]:
-            fh.write(json.dumps({"k": k, "v": v}) + "\n")
-    _run_dedup_stream(spark, src, ckpt, dst)
-
-    final = spark.read.parquet(dst)
-    assert final.count() == 3
-    assert {r.k for r in final.collect()} == {1, 2, 3}
-    assert final.filter(F.col("k") == 3).collect()[0].v == "c"
-
-
 def _run_native_stream(spark, src, ckpt, dst, **kw):
-    from siskin_spark.streaming.stateful import streaming_dedup_native
-
     schema = "k bigint, v string, ts timestamp"
     stream = spark.readStream.schema(schema).json(src)
     q = (
@@ -123,8 +78,7 @@ def _run_native_stream(spark, src, ckpt, dst, **kw):
 
 
 def test_streaming_dedup_native_across_restarts(tmp_path, spark):
-    """The JVM fast path has the same cross-restart exactly-once
-    contract as the Python-state variant: in-batch dups suppressed,
+    """Cross-restart exactly-once keep-first: in-batch dups suppressed,
     state survives the checkpoint, only new keys emit on re-run."""
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
@@ -146,14 +100,13 @@ def test_streaming_dedup_native_across_restarts(tmp_path, spark):
     final = spark.read.parquet(dst)
     assert final.count() == 3
     assert {r.k for r in final.collect()} == {1, 2, 3}
+    assert final.filter(F.col("k") == 3).collect()[0].v == "c"
 
 
 def test_streaming_dedup_native_within_watermark(tmp_path, spark):
     """Bounded-state variant: dropDuplicatesWithinWatermark on the
     watermarked stream dedups within the delay window; the arg
     contract rejects a watermark without its event-time column."""
-    from siskin_spark.streaming.stateful import streaming_dedup_native
-
     src = str(tmp_path / "src")
     os.makedirs(src)
     with open(os.path.join(src, "b1.json"), "w") as fh:

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Per-job timeline for one warm pass of declared queries: job id,
-submission->completion wall segment, stage count, task count, and name
-of the first stage — shows which jobs serialize and which overlap.
+submission->completion wall segment, stage count, task count and job
+description — shows which jobs serialize and which overlap. A job
+still running when the pass returns prints as "unfinished".
 Usage: python tools_jobs_query.py q1 [q2 ...]
 """
 import os
@@ -55,6 +56,7 @@ def main() -> None:
                         j.jobId(),
                         sub,
                         comp,
+                        j.stageIds().size(),
                         j.numTasks(),
                         j.description().get()
                         if j.description().isDefined()
@@ -65,11 +67,15 @@ def main() -> None:
         if rows:
             base = rows[0][1]
             print(f"== {name}: wall {t1 - t0:.3f}s, {len(rows)} jobs")
-            for jid, sub, comp, ntasks, desc in rows:
+            for jid, sub, comp, nstages, ntasks, desc in rows:
+                span = (
+                    "unfinished"
+                    if comp == -1
+                    else f"+{(comp - base) / 1000.0:7.3f}  ({(comp - sub) / 1000.0:6.3f}s)"
+                )
                 print(
-                    f"  job {jid}: +{(sub - base) / 1000.0:7.3f} -> "
-                    f"+{(comp - base) / 1000.0:7.3f}  "
-                    f"({(comp - sub) / 1000.0:6.3f}s, {ntasks} tasks)"
+                    f"  job {jid}: +{(sub - base) / 1000.0:7.3f} -> {span}  "
+                    f"{nstages} stages, {ntasks} tasks  {desc}"
                 )
     spark.stop()
 
